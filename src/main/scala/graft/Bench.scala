@@ -61,6 +61,12 @@ import org.apache.spark.sql.types.MapType
   */
 object Bench {
 
+  /** A JSON number formatted with `fmt` (e.g. "%.3f") under Locale.ROOT:
+    * the default locale renders a comma decimal separator on de/fr JVMs,
+    * which is invalid JSON. */
+  private[graft] def fmtNum(fmt: String, v: Double): String =
+    String.format(java.util.Locale.ROOT, fmt, Double.box(v))
+
   /** Force full evaluation of every output column: hash each row's columns
     * (MapType via to_json — hash() on maps is disallowed/order-unstable)
     * and reduce to one driver-side long. Nothing prunable remains. */
@@ -1263,11 +1269,11 @@ object Bench {
         ",\"scale\":" + scaleCleanJson +
         ",\"probe_clean_threshold_sec\":" + CleanProbeSec +
         ",\"probe_rel_clean_factor\":" + RelCleanFactor +
-        f""","probe_session_best_sec":$bestProbePar%.3f}"""
+        ""","probe_session_best_sec":""" + fmtNum("%.3f", bestProbePar) + "}"
     }
     def rawSeriesLine: String = {
       val rawJson = raw.map { case (k, ts) =>
-        "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+        "\"" + k + "\":" + ts.map(fmtNum("%.3f", _)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
       s"""{"metric":"raw_series","raw":$rawJson,"clean":$cleanJson,"sf":"$sfDir"}"""
     }
@@ -1365,8 +1371,8 @@ object Bench {
       else { ncRows += short; scaleMin(name) }
     }
     def rv(name: String): Double = results.getOrElse(name, -1.0)
-    def sec(v: Double): String = if (v < 0) "-1" else f"$v%.4g"
-    def thr(v: Double): String = if (v < 0) "-1" else f"$v%.0f"
+    def sec(v: Double): String = if (v < 0) "-1" else fmtNum("%.4g", v)
+    def thr(v: Double): String = if (v < 0) "-1" else fmtNum("%.0f", v)
     val headlineShort = headline.map(_._1).map { n =>
       val short = n match {
         case "q11_pivot_daily_double" => "q11d"
@@ -1423,7 +1429,7 @@ object Bench {
       // negative g_norm (normalize measured faster than plain, within
       // noise) with "not computed" in the committed r18 line
     ).map { case (s, n) =>
-      s -> results.get(n).map(v => f"$v%.4g").getOrElse("-1")
+      s -> results.get(n).map(fmtNum("%.4g", _)).getOrElse("-1")
     }
     val compactJson =
       (headlineShort ++ parseShort ++ latencyShort ++ scaleShort ++ gateShort)
@@ -1431,7 +1437,7 @@ object Bench {
     val compactLine =
       s"""{"metric":"compact","best":$compactJson,"nc":""" +
         ncRows.map("\"" + _ + "\"").mkString("[", ",", "]") +
-        f""","probe_best":$bestProbePar%.3f,"sf":"$sfDir"}"""
+        ""","probe_best":""" + fmtNum("%.3f", bestProbePar) + s""","sf":"$sfDir"}"""
     // Headroom budget (r14 verdict #6): the committed r14 line measured
     // 1,302 chars against this 1,900 tripwire — ~600 chars spare, or
     // ~20 more "key":0.0000 rows before trimming is needed. Spill

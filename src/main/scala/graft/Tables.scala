@@ -116,7 +116,9 @@ object Tables {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(hconf).getFileStatus(hp).getLen
     } catch { case _: Throwable => Long.MaxValue / math.max(1, nFiles) }
-    math.max(1L, (len + maxPB - 1) / maxPB)
+    // ceiling division that cannot overflow: `len + maxPB - 1` wraps
+    // negative for the Long.MaxValue fallback
+    math.max(1L, len / maxPB + (if (len % maxPB == 0) 0 else 1))
   }
 
   /** Builds a session configured the way this engine expects: AQE on,

@@ -139,30 +139,6 @@ object Writers {
       ()
     }
 
-  /** Sum of parquet footer row counts under a directory (recursive) — a
-    * table's exact row count from O(files) metadata reads, no Spark job
-    * and no data scan. Used where a just-written table's count is needed
-    * and the alternative is re-scanning it (e.g. the fresh-db load's
-    * per-batch ledger count). */
-  def parquetRowCount(dir: String): Long = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            f.getPath, conf))
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
-  }
-
   /** Generalized multi-table write-then-swap where each entry is
     * (destination, writer). Writers run in declaration order and receive
     * the full destination→temp-path map, so a LATER entry may read an

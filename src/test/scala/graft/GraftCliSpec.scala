@@ -233,10 +233,56 @@ class GraftCliSpec extends SparkSpec {
       spark, s"$db/rsid_idx", s"$db/variants", rs).nonEmpty)
     // --compact on load folds the genotype rewrite into the load itself
     val vcfC = vcfDir.resolve("c.vcf").toString
-    graft.vcf.SyntheticVcf.write(vcfC, 500, seed = 31L)
-    Graft.run(spark, Array("load", vcfC, "--db", db, "--compact", "--store-genotypes"))
+    // (annotated, so the gene projection has rows to serve)
+    graft.vcf.SyntheticVcf.write(vcfC, 500, seed = 31L, annFrac = 0.5)
+    val outC = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(outC)) {
+      Graft.run(spark, Array("load", vcfC, "--db", db, "--compact", "--store-genotypes"))
+    }
     assert(genoFiles().values.forall(_ == 1), s"not folded: ${genoFiles()}")
     assert(spark.read.parquet(s"$db/genotypes").count() > g0)
+    // ...and, the batch having appended, folds the variants store per
+    // chrom to one file each, with both covering projections serving
+    assert(outC.toString.contains("stage compact_variants"), outC.toString)
+    val chromDirs = new java.io.File(s"$db/variants").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("chrom="))
+    assert(chromDirs.nonEmpty)
+    chromDirs.foreach { d =>
+      val n = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(n == 1, s"${d.getName} holds $n parquet files after load --compact")
+    }
+    val vC = spark.read.parquet(s"$db/variants")
+    val rsC = vC.filter($"rs_id".isNotNull)
+      .select($"rs_id").head().getString(0)
+    assert(graft.query.PointLookup.byRsid(
+      spark, s"$db/rsid_idx", s"$db/variants", rsC).nonEmpty)
+    val geneC = vC.filter($"gene".isNotNull).select($"gene").head().getString(0)
+    assert(graft.query.PointLookup.byGene(
+      spark, s"$db/gene_idx", geneC).nonEmpty)
+  }
+
+  test("load prints the per-layer stage lines on a fresh and an append load") {
+    // the `stage <name>` lines are the contract the bench's per-layer
+    // load.* metrics parse; each genotyped load must print all of them
+    val db = Files.createTempDirectory("graftdb").toString
+    val dir = Files.createTempDirectory("stagevcf")
+    val Stage = """\s*stage\s+(\S+)\s+\d+[.,]\d+s\s+read=.*""".r
+    Seq(("a.vcf", 11L), ("b.vcf", 13L)).foreach { case (name, seed) =>
+      val vcf = dir.resolve(name).toString
+      graft.vcf.SyntheticVcf.write(vcf, 200, seed = seed)
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out)) {
+        Graft.run(spark, Array("load", vcf, "--db", db, "--store-genotypes"))
+      }
+      val stages = out.toString.linesIterator.collect { case Stage(n) => n }.toSet
+      Seq("file_hash", "ledger_begin", "parse_count", "write_genotypes",
+        "genotype_qc", "join_qc", "schema_check", "write_tables",
+        "ledger_commit").foreach { s =>
+        assert(stages(s), s"$name: no 'stage $s' line in:\n$out")
+      }
+    }
+    assert(spark.read.parquet(s"$db/ledger")
+      .filter($"status" === "completed").count() == 2)
   }
 
   test("numeric-contig cohort (--no-human-genome) appends a chrX batch " +
@@ -1720,18 +1766,19 @@ class GraftCliSpec extends SparkSpec {
   }
 
   test("cohort-scale QC join arm (shuffle, no broadcast) loads identically") {
-    // batchN >= graft.qc.broadcast.max.rows takes the shuffle join —
+    // a QC side above Spark's broadcast threshold takes the shuffle join —
     // the arm every cohort-scale load runs in production but specs never
-    // reach at fixture size. Force it to 0 and assert the loaded store
-    // matches a broadcast-arm load of the same file bit-for-bit.
+    // reach at fixture size. Disable broadcasting and assert the loaded
+    // store matches a broadcast-arm load of the same file bit-for-bit.
     val vcf = Files.createTempDirectory("qcarm").resolve("a.vcf").toString
     graft.vcf.SyntheticVcf.write(vcf, 300, seed = 7700L)
     val dbB = Files.createTempDirectory("graftdb").toString
     Graft.run(spark, Array("load", vcf, "--db", dbB, "--store-genotypes"))
     val dbS = Files.createTempDirectory("graftdb").toString
-    System.setProperty("graft.qc.broadcast.max.rows", "0")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try Graft.run(spark, Array("load", vcf, "--db", dbS, "--store-genotypes"))
-    finally System.clearProperty("graft.qc.broadcast.max.rows")
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     val cols = spark.read.parquet(s"$dbB/variants").columns
       .filterNot(_ == "load_batch_id").sorted.toSeq
     def fp(db: String) = spark.read.parquet(s"$db/variants")

@@ -38,9 +38,12 @@ class TablesSpreadSpec extends SparkSpec {
   }
 
   test("spreadBy is the identity when planned splits >= slots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    val root = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    // a fresh child: the writer refuses the directory just created; one
+    // part-file so the files >= slots early exit does not decide the plan
+    val dir = s"$root/t"
     try {
-      spark.range(1000).toDF("id").write.parquet(dir)
+      spark.range(1000).toDF("id").coalesce(1).write.parquet(dir)
       val df = spark.read.parquet(dir)
       // force tiny splits so the (small) file plans >= 4 splits (slots=4)
       spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
@@ -55,6 +58,6 @@ class TablesSpreadSpec extends SparkSpec {
         .queryExecution.optimizedPlan.toString
       assert(plan2.contains("RepartitionByExpression"),
         s"expected a keyed spread on the under-parallel layout, got:\n$plan2")
-    } finally graft.sinks.DbFs.deleteRecursive(dir)
+    } finally graft.sinks.DbFs.deleteRecursive(root)
   }
 }
